@@ -18,7 +18,8 @@ certifies for C6 (kvraft/server.go:75-78).
 
 Layout under <base_dir>:
 
-  manifest.json           {version, n_docs, avgdl, posting_cap, ...}
+  manifest.json           {version, n_docs, avgdl, posting_cap,
+                          schemas: {component: read schema}, ...}
   manifest-<ver>.json     immutable per-version commit record
   postings-<ver>/         parquet (term, doc_id, tf, dl)
                           PARTITIONED BY tb = pmod(xxhash64(term), B)
@@ -69,6 +70,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mapreduce_distributed_systems_spark.functions.text import words
 from mapreduce_distributed_systems_spark.operators.retrieval import (
@@ -134,6 +136,11 @@ def write_bm25_index(
     key — readers that need phrase support must check (and tests pin
     that append commits carry the component forward).
 
+    Each component's read schema is recorded under the manifest's
+    `schemas` key (postings, terms, doclens, and positions when
+    written), so readers open the index with `.schema(...)` instead of
+    paying one parquet-footer inference job per component.
+
     `pre_bucketed=True` (r14 optimization, guide §2.4) declares that
     the caller already attached a `tb` column computed with THIS
     `n_buckets` and hash-repartitioned the component frames by it —
@@ -158,10 +165,11 @@ def write_bm25_index(
             "tb", term_bucket(F.col("term"), n_buckets)
         ).repartition("tb")
 
+    post = _bucketed(post)
+
     def _write_post():
         (
-            _bucketed(post)
-            .write.mode("overwrite")
+            post.write.mode("overwrite")
             .partitionBy("tb")
             .parquet(post_dir)
         )
@@ -180,20 +188,26 @@ def write_bm25_index(
         "doclens_dir": dl_dir,
         "n_term_buckets": n_buckets,
         **stats,
+        "schemas": {
+            "postings": _read_schema(post),
+            "terms": _read_schema(terms),
+            "doclens": _read_schema(doclens),
+        },
     }
     if positions is not None:
         pos_dir = os.path.join(base_dir, f"positions-{version:03d}")
+        positions = _bucketed(positions)
 
         def _write_pos():
             (
-                _bucketed(positions)
-                .write.mode("overwrite")
+                positions.write.mode("overwrite")
                 .partitionBy("tb")
                 .parquet(pos_dir)
             )
 
         writes.append(_write_pos)
         manifest["positions_dir"] = pos_dir
+        manifest["schemas"]["positions"] = _read_schema(positions)
     # r13 optimization (guide §2.6): the component writes are
     # independent jobs — callers materialize the shared tf cache with
     # an action BEFORE committing (build_and_commit_bm25's stats
@@ -219,13 +233,32 @@ def write_bm25_index(
     return path
 
 
+def _read_schema(df: DataFrame) -> dict:
+    """A component's schema as the manifest records it: the written
+    frame's columns with the `tb` partition column last, where
+    partition discovery puts it (parquet reads every field back
+    nullable whatever the JSON says)."""
+    fields = sorted(df.schema.fields, key=lambda f: f.name == "tb")
+    return T.StructType(fields).jsonValue()
+
+
+def _read_component(
+    spark: SparkSession, manifest: dict, key: str
+) -> DataFrame:
+    """Open one index component (`<key>_dir`) with the schema its
+    manifest pinned: no schema-inference job, and `tb` comes back as
+    the int partition column the serve joins prune on."""
+    schema = T.StructType.fromJson(manifest["schemas"][key])
+    return spark.read.schema(schema).parquet(manifest[f"{key}_dir"])
+
+
 def read_bm25_index(
     spark: SparkSession, base_dir: str, version: int | None = None
 ) -> tuple[DataFrame, DataFrame, DataFrame, dict]:
     """Resolve the manifest (latest, or a pinned historical version),
-    then load (postings, terms, doclens, manifest). Postings come
-    back with the partition column `tb` restored as int so callers
-    can partition-prune with a bucket filter."""
+    then load (postings, terms, doclens, manifest) with the schemas
+    the manifest pins. Postings carry the partition column `tb` (int)
+    so callers can partition-prune on it."""
     name = (
         "manifest.json" if version is None else f"manifest-{version:03d}.json"
     )
@@ -244,11 +277,9 @@ def read_bm25_index(
                     "garbage-collected (see gc.json); pin a retained "
                     "version or rebuild"
                 )
-    post = spark.read.parquet(manifest["postings_dir"]).withColumn(
-        "tb", F.col("tb").cast("int")
-    )
-    terms = spark.read.parquet(manifest["terms_dir"])
-    doclens = spark.read.parquet(manifest["doclens_dir"])
+    post = _read_component(spark, manifest, "postings")
+    terms = _read_component(spark, manifest, "terms")
+    doclens = _read_component(spark, manifest, "doclens")
     return post, terms, doclens, manifest
 
 
@@ -275,13 +306,12 @@ def positional_postings(docs: DataFrame, cap: int = POSTING_CAP) -> DataFrame:
 def read_positional_postings(
     spark: SparkSession, manifest: dict
 ) -> DataFrame:
-    """Load the positional component a manifest points at, with the
-    physical bucket column restored for partition pruning. Raises
-    KeyError on a version built without phrase support — callers
-    must not silently degrade to phrase-less results."""
-    return spark.read.parquet(manifest["positions_dir"]).withColumn(
-        "tb", F.col("tb").cast("int")
-    )
+    """Load the positional component a manifest points at, with its
+    pinned schema (the physical bucket column `tb` included, for
+    partition pruning). Raises KeyError on a version built without
+    phrase support — callers must not silently degrade to phrase-less
+    results."""
+    return _read_component(spark, manifest, "positions")
 
 
 def _prune_to_buckets(rel: DataFrame, cap: int, n_buckets: int) -> DataFrame:
@@ -509,12 +539,15 @@ def bm25_topk_from_index(
     denormalized, so NO corpus-sized join exists on the serve path).
 
     The query block is the only non-index work: tokenize the <= cap
-    query docs, pick each one's QUERY_TERMS lowest-df terms, and
-    COLLECT them (bounded: <= cap x QUERY_TERMS rows — the repo's
-    LIMIT-capped anchor-block discipline; in production the query
-    terms live client-side to begin with). Collecting makes the term
-    list a literal, which is what lets the posting read PRUNE to the
-    buckets those terms hash into instead of scanning the index.
+    query docs and pick each one's QUERY_TERMS lowest-df terms, each
+    tagged with its term bucket (bounded: <= cap x QUERY_TERMS rows —
+    the repo's LIMIT-capped anchor-block discipline). That block is
+    broadcast and joined to the postings on (tb, term), so the whole
+    request is ONE SQL execution with no driver round trip: dynamic
+    partition pruning turns the broadcast's tb values into the
+    postings scan's partition filter at run time, and the read still
+    touches only the buckets the query terms hash into instead of
+    scanning the index.
 
     IEEE parity with the in-query ranker: the weight expression is
     associated identically; n_docs/avgdl literals are the same doubles
@@ -533,15 +566,26 @@ def bm25_topk_from_index(
     qterms = qdocs.select(
         "query_id", F.explode(words("text")).alias("term")
     ).distinct()
-    wq = W.partitionBy("query_id").orderBy(F.asc("df"), F.asc("term"))
     qt = (
         qterms.join(terms, "term")  # df from the STORED dictionary
-        .withColumn("_trn", F.row_number().over(wq))
-        .where(F.col("_trn") <= QUERY_TERMS)
+        # each query's QUERY_TERMS lowest-(df, term) terms as a sorted
+        # slice, not a row_number <= k filter: the optimizer rewrites
+        # that filter into a window group limit AFTER dynamic partition
+        # pruning has copied this plan, the copy then no longer matches
+        # the join's broadcast, and Spark drops the pruning filter
+        .groupBy("query_id")
+        .agg(
+            F.slice(
+                F.array_sort(F.collect_list(F.struct("df", "term"))),
+                1,
+                QUERY_TERMS,
+            ).alias("_qt")
+        )
+        .select("query_id", F.explode("_qt").alias("_q"))
         .select(
             "query_id",
-            "term",
-            "df",
+            "_q.term",
+            "_q.df",
             # bucket with the MANIFEST's count — the layout is a
             # per-version property, not the current module constant
             term_bucket(
@@ -549,16 +593,9 @@ def bm25_topk_from_index(
             ).alias("tb"),
         )
     )
-    qrows = qt.collect()  # bounded: <= BM25_QUERY_CAP x QUERY_TERMS
-    buckets = sorted({r.tb for r in qrows})
-    qlocal = spark.createDataFrame(
-        [(r.query_id, r.term, r.df) for r in qrows],
-        "query_id long, term string, df long",
-    )
-
     cand = (
-        post.where(F.col("tb").isin(buckets))  # partition-pruned read
-        .join(F.broadcast(qlocal), "term")
+        # the broadcast's tb values prune the postings read (DPP)
+        post.join(F.broadcast(qt), ["tb", "term"])
         .where(F.col("doc_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -672,17 +709,19 @@ def phrase_topk_from_index(
     (consecutive token offsets), ranked hits DESC with doc_id
     tiebreak. Integer-exact end to end.
 
-    Plan shape: the query block is collected (bounded: <=
-    BM25_QUERY_CAP rows — the repo's anchor-block discipline) so the
-    positional read PRUNES to the term buckets the phrase words hash
-    into; each phrase word then broadcast-joins its posting leg, the
-    <= PHRASE_LEN legs join on (query_id, doc_id) — every leg bounded
-    by the posting cap — and the phrase count is a shifted
-    intersection of the position arrays (start positions p where
-    p+i is in word i's list), entirely JVM-side array built-ins. The
-    per-query rank window's input is <= the smallest leg's cap. No
-    corpus-sized join, shuffle, or driver funnel anywhere on the
-    serve path — the corpus appears only through the pruned artifact.
+    Plan shape: the query block (bounded: <= BM25_QUERY_CAP rows —
+    the repo's anchor-block discipline) gives one leg per phrase word:
+    (query_id, word i, its term bucket), broadcast and joined to the
+    positional component on (tb, term), so dynamic partition pruning
+    limits each leg's read to the buckets word i hashes into, in ONE
+    SQL execution with no driver round trip. The <= PHRASE_LEN legs
+    join on (query_id, doc_id) — every leg bounded by the posting
+    cap — and the phrase count is a shifted intersection of the
+    position arrays (start positions p where p+i is in word i's
+    list), entirely JVM-side array built-ins. The per-query rank
+    window's input is <= the smallest leg's cap. No corpus-sized
+    join, shuffle, or driver funnel anywhere on the serve path — the
+    corpus appears only through the pruned artifact.
 
     Reference parity: positions are the natural extension of the
     indexer app's posting lists (mrapps/indexer.go:20-39) from doc
@@ -701,25 +740,16 @@ def phrase_topk_from_index(
             *[F.col("toks")[i].alias(f"w{i}") for i in range(PHRASE_LEN)],
         )
     )
-    qrows = q.select(
-        "query_id",
-        *[F.col(f"w{i}") for i in range(PHRASE_LEN)],
-        *[
-            term_bucket(F.col(f"w{i}"), nb).alias(f"tb{i}")
-            for i in range(PHRASE_LEN)
-        ],
-    ).collect()  # bounded: <= BM25_QUERY_CAP rows
-
     legs = []
     for i in range(PHRASE_LEN):
-        buckets = sorted({r[f"tb{i}"] for r in qrows})
-        qi = spark.createDataFrame(
-            [(r.query_id, r[f"w{i}"]) for r in qrows],
-            "query_id long, term string",
+        qi = q.select(
+            "query_id",
+            F.col(f"w{i}").alias("term"),
+            term_bucket(F.col(f"w{i}"), nb).alias("tb"),
         )
         legs.append(
-            positional.where(F.col("tb").isin(buckets))  # pruned read
-            .join(F.broadcast(qi), "term")
+            # the broadcast's tb values prune the leg's read (DPP)
+            positional.join(F.broadcast(qi), ["tb", "term"])
             .select("query_id", "doc_id", F.col("positions").alias(f"p{i}"))
         )
     j = legs[0]
@@ -761,6 +791,7 @@ def phrase_topk_from_index(
     "posting cap, never a corpus scan. Ranked by hit count with a "
     "deterministic doc_id tiebreak.",
     helpers=(build_and_commit_bm25, write_bm25_index, _prune_to_buckets,
+             read_bm25_index, read_positional_postings,
              phrase_topk_from_index),  # VERDICT r13 #1c + r14 build
 )
 def retrieval_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -794,7 +825,7 @@ def retrieval_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # VERDICT r13 #1c + r14 single-pass build: the certified behavior
     # lives in these shared helpers
     helpers=(build_and_commit_bm25, write_bm25_index, _prune_to_buckets,
-             bm25_topk_from_index),
+             read_bm25_index, bm25_topk_from_index),
 )
 def doc_bm25_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _scratch_dir("bm25_index_")
@@ -1068,7 +1099,8 @@ def index_version_diff(
     "incremental downstream (cache invalidation, replica shipping) "
     "consumes instead of re-reading the whole artifact.",
     helpers=(build_and_commit_bm25, append_bm25_index, write_bm25_index,
-             _prune_to_buckets, index_version_diff),  # r13 #1c + r14
+             _prune_to_buckets, read_bm25_index, read_positional_postings,
+             index_version_diff),  # r13 #1c + r14
 )
 def bm25_index_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the base index from the even doc_id half WITH the
@@ -1226,7 +1258,8 @@ def gc_bm25_index(base_dir: str, keep_latest: int = 2) -> dict:
     "remains — a post-GC index must return byte-identical BM25 "
     "rankings or the driver hash catches it.",
     helpers=(build_and_commit_bm25, write_bm25_index, _prune_to_buckets,
-             bm25_topk_from_index, gc_bm25_index),  # r13 #1c + r14
+             read_bm25_index, bm25_topk_from_index,
+             gc_bm25_index),  # r13 #1c + r14
 )
 def doc_bm25_serve_post_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered r12 (oracle: BM25_ORACLE, identical to

@@ -46,6 +46,10 @@ def test_round_trip_preserves_postings_and_stats(spark, sf_dir):
     base = tempfile.mkdtemp(prefix="bm25_rt_")
     build_and_commit_bm25(spark, sf_dir, base)
     post, terms, doclens, manifest = read_bm25_index(spark, base)
+    # the schemas the manifest pins are the ones inference would find
+    for rel, key in ((post, "postings_dir"), (terms, "terms_dir"),
+                     (doclens, "doclens_dir")):
+        assert rel.schema == spark.read.parquet(manifest[key]).schema
     # the stored dictionary and doc lengths must equal a fresh
     # re-aggregation of the corpus
     from mapreduce_distributed_systems_spark.functions.text import words
@@ -147,6 +151,83 @@ def test_serve_plan_prunes_buckets_and_equals_in_query_ranker(spark, sf_dir):
         for r in get_spec("doc_bm25_topk").fn(spark, sf_dir).collect()
     }
     assert served == rebuilt
+
+
+def _partitions_read(plan, dir_prefix: str) -> list[int]:
+    """'number of partitions read' of every executed file scan whose
+    root path contains `dir_prefix`, walking into adaptive plans and
+    their query stages."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _partitions_read(plan.executedPlan(), dir_prefix)
+    if name.endswith("QueryStageExec"):
+        return _partitions_read(plan.plan(), dir_prefix)
+    found = []
+    if name == "FileSourceScanExec" and dir_prefix in str(
+        plan.relation().location().rootPaths()
+    ):
+        found.append(plan.metrics().get("numPartitions").get().value())
+    children = plan.children()
+    for i in range(children.size()):
+        found += _partitions_read(children.apply(i), dir_prefix)
+    return found
+
+
+def test_serve_is_one_plan_pruned_to_the_query_buckets(spark, sf_dir):
+    """A request is one JVM-side plan: the query block reaches the
+    postings join as a broadcast, not as driver-collected rows turned
+    back into a Python-RDD relation (an ExistingRDD leaf). Pruning is
+    then dynamic: after execution the postings scan has read exactly
+    as many tb partitions as there are distinct buckets among the
+    query's selected terms — a silent fall-back to a full index scan
+    would keep results right and only show here."""
+    from mapreduce_distributed_systems_spark.functions.text import words
+    from mapreduce_distributed_systems_spark.operators.retrieval import (
+        BM25_QUERY_FILTER,
+        QUERY_TERMS,
+    )
+    from mapreduce_distributed_systems_spark.storage.lexical_index import (
+        bm25_topk_from_index,
+    )
+
+    base = tempfile.mkdtemp(prefix="bm25_dpp_")
+    build_and_commit_bm25(spark, sf_dir, base)
+    qdir = tempfile.mkdtemp(prefix="bm25_dpp_q_")
+    qdoc = (
+        load_table(spark, sf_dir, "documents")
+        .where(F.expr(BM25_QUERY_FILTER))
+        .orderBy("doc_id")
+        .limit(1)
+        .select("doc_id", "text")
+    )
+    qdoc.write.parquet(f"{qdir}/documents.parquet")
+    post, terms, _dl, m = read_bm25_index(spark, base)
+    df = bm25_topk_from_index(spark, qdir, post, terms, m)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert df.collect()
+
+    qterms = {
+        r.term
+        for r in qdoc.select(F.explode(words("text")).alias("term")).collect()
+    }
+    chosen = sorted(
+        (r.df, r.term) for r in terms.collect() if r.term in qterms
+    )[:QUERY_TERMS]
+    buckets = {
+        r.tb
+        for r in spark.createDataFrame(
+            [(t,) for _df, t in chosen], "term string"
+        )
+        .select(term_bucket(F.col("term"), m["n_term_buckets"]).alias("tb"))
+        .collect()
+    }
+    read = _partitions_read(
+        df._jdf.queryExecution().executedPlan(), "postings-"
+    )
+    assert read == [len(buckets)], (read, sorted(buckets))
+    n_dirs = len(glob.glob(f"{m['postings_dir']}/tb=*"))
+    assert len(buckets) < n_dirs  # the check can tell pruned from full
 
 
 def test_serve_honors_the_manifest_bucket_count(spark, sf_dir):

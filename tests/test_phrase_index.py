@@ -204,7 +204,9 @@ def test_default_build_manifest_shape_is_unchanged(spark, sf_dir):
         "n_docs",
         "avgdl",
         "posting_cap",
+        "schemas",
     }
+    assert set(manifest["schemas"]) == {"postings", "terms", "doclens"}
     assert not any(
         p.startswith("positions-") for p in os.listdir(base)
     ), "default build must not write a positional dir"
